@@ -236,6 +236,10 @@ def test_dbscan_full_composition_plan(spark, sf_dir):
     # driver finish (r14): LocalRelation pairs at sf scale → the whole
     # composition returns as one local relation, zero exchanges
     pairs_drv = eps_pairs_exact(m, eps=1.2)
+    # the driver finish below needs driver-resident pairs: a tightened
+    # _DRIVER_EPS_ROWS / _DRIVER_EPS_MAX_PAIRS cap fails HERE, not as an
+    # unexplained exchange count in the audit
+    assert SIM._plan_is_local_relation(pairs_drv)
     rep_drv = audit_plan(dbscan(m, eps=1.2, min_pts=4, pairs=pairs_drv))
     assert rep_drv.n_exchanges == 0
     assert "Join" not in rep_drv.text
@@ -368,10 +372,11 @@ def test_knn_refine_plan_two_equijoins(spark, sf_dir):
     assert "BroadcastNestedLoop" not in rep.text
 
 
-def test_filtered_knn_plan_no_nested_loop(spark, sf_dir):
+def test_filtered_knn_plan_no_nested_loop(spark, sf_dir, monkeypatch):
     """r10 filtered search: the allow-mask is a semi EQUI-join on the
     id — a nested-loop or Python op here would mean the mask is being
     applied after scoring instead of below it."""
+    from raft_spark.operators import similarity as SIM
     from raft_spark.operators.similarity import knn_brute, knn_ivf_pq, build_ivf_pq_index
     from raft_spark.sources.tables import embeddings_matrix
 
@@ -381,14 +386,47 @@ def test_filtered_knn_plan_no_nested_loop(spark, sf_dir):
     rep = audit_plan(knn_brute(m, q, k=5, strategy="expr", filter_ids=allow))
     assert "CartesianProduct" not in rep.text
     assert "BroadcastNestedLoop" not in rep.text
-    # IVF-PQ: the mask joins the CODES scan (before the Arrow ADC pass):
-    # the shortlist side of the final refine must not contain odd ids
+    # IVF-PQ, distributed plan (a prebuilt index this small is served
+    # from the driver, so the resident cap is forced to 0): the mask
+    # joins the CODES scan (before the Arrow ADC pass); the shortlist
+    # side of the final refine must not contain odd ids
     idx = build_ivf_pq_index(m, n_lists=4, kmeans_iters=1)
-    out = knn_ivf_pq(m, q, k=5, n_probe=4, index=idx, filter_ids=allow)
-    rep2 = audit_plan(out)
-    assert "CartesianProduct" not in rep2.text
-    assert "BroadcastNestedLoop" not in rep2.text
-    assert all(r["nid"] % 2 == 0 for r in out.collect())
+    with monkeypatch.context() as mp:
+        mp.setattr(SIM, "RESIDENT_INDEX_BYTES", 0)
+        mp.setattr(SIM, "_RESIDENT", SIM._ResidentFrames())
+        out = knn_ivf_pq(m, q, k=5, n_probe=4, index=idx, filter_ids=allow)
+        assert not SIM._plan_is_local_relation(out)
+        rep2 = audit_plan(out)
+        assert "CartesianProduct" not in rep2.text
+        assert "BroadcastNestedLoop" not in rep2.text
+        assert all(r["nid"] % 2 == 0 for r in out.collect())
+    # served: the mask is an isin on the resident ids before ADC
+    served = knn_ivf_pq(m, q, k=5, n_probe=4, index=idx, filter_ids=allow)
+    assert SIM._plan_is_local_relation(served)
+    assert all(r["nid"] % 2 == 0 for r in served.collect())
+
+
+def test_ivf_pq_scan_reads_only_probed_lists(spark, sf_dir, tmp_path,
+                                            monkeypatch):
+    """The distributed IVF-PQ ADC pass filters codes to the probed lists
+    before the Python pass: over a list_id-partitioned index copy
+    (write_ivf_pq_index) the scan must carry the list_id partition
+    filter, so a search reads only the probed lists' directories."""
+    import re as _re
+
+    from raft_spark.operators import similarity as SIM
+    from raft_spark.sources.tables import embeddings_matrix
+
+    m = embeddings_matrix(spark, sf_dir).select("id", "features")
+    q = m.filter(F.col("id") == 0)
+    p = str(tmp_path / "ivf_pq")
+    SIM.write_ivf_pq_index(SIM.build_ivf_pq_index(m, n_lists=4, kmeans_iters=1), p)
+    idx = SIM.read_ivf_pq_index(spark, p)
+    monkeypatch.setattr(SIM, "RESIDENT_INDEX_BYTES", 0)  # distributed plan
+    monkeypatch.setattr(SIM, "_RESIDENT", SIM._ResidentFrames())
+    rep = audit_plan(SIM.knn_ivf_pq(m, q, k=5, n_probe=2, index=idx))
+    filters = _re.findall(r"PartitionFilters: \[(.*?)\]", rep.text)
+    assert any("list_id" in f for f in filters), filters
 
 
 def test_span_ingest_plan_no_cartesian(spark, sf_dir, tmp_path):

@@ -276,6 +276,36 @@ def test_dbscan_driver_finish_null_id_falls_back(spark, monkeypatch):
     assert (None, -1, "noise") in rows
 
 
+def test_dbscan_driver_finish_non_integral_endpoints(spark, monkeypatch):
+    """Endpoints convert with Spark's cast('long'), as the distributed
+    canonicalization does: a fractional double truncates, and (with
+    ANSI off) a malformed string is null and its pair is skipped — the
+    driver finish neither raises nor keeps it."""
+    import pyarrow as pa
+
+    df = spark.createDataFrame(
+        [(i, [0.0]) for i in [1, 2, 3, 4]], "id long, features array<double>")
+    pairs = spark.createDataFrame(pa.table({
+        "a": pa.array([1.0, 2.5, 3.9], pa.float64()),
+        "b": pa.array([2.0, 3.0, 1.0], pa.float64()),
+    }))
+    rows = _dbscan_both_paths(spark, monkeypatch, df, pairs, min_pts=2)
+    assert (1, 1, "core") in rows and (4, -1, "noise") in rows
+    spairs = spark.createDataFrame(pa.table({
+        "a": pa.array(["1", "2.5", "x", "4"]),
+        "b": pa.array(["2", "3", "1", "x"]),
+    }))
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        rows = _dbscan_both_paths(spark, monkeypatch, df, spairs, min_pts=2)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    # '2.5' casts to 2: edges (1,2),(2,3); the 'x' pairs are skipped
+    assert rows == [(1, 1, "core"), (2, 1, "core"), (3, 1, "core"),
+                    (4, -1, "noise")]
+
+
 def test_single_linkage_threshold_driver_finish_matches_distributed(
     spark, monkeypatch,
 ):
